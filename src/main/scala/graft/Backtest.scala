@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
-import graft.ingest.TickIngest
 import graft.report.Reports
 import graft.serve.Serve
 import graft.sim._
@@ -33,13 +32,20 @@ import graft.workers.Workers
   *      by role + ranked scenarios, written to `outDir` (ranking as CSV,
   *      reports as JSON via [[serve.Serve]]).
   *
-  * Scale shape: every phase is a groupBy/window/join plan (no driver
-  * loops); the kernel phase partitions BY SCENARIO — the reference's
-  * process-pool-per-scenario (`batch_orchestrator.py` worker pool)
-  * becomes `repartition(scenarioId) + sortWithinPartitions + mapPartitions`,
-  * so a 1000-executor cluster runs 1000 scenarios concurrently with no
-  * coordinator. Windows are a dimension table (broadcast into the tick
-  * tagging join); ticks shuffle exactly once (into scenario partitions).
+  * Scale shape: no driver loops; the ticks move in three steps.
+  *   - Phases 1, 2, 5 and the regions of 6 are ONE per-symbol scan
+  *     ([[MountScan]]): the feed shuffles once into symbol partitions
+  *     (`repartition(symbol) + sortWithinPartitions(symbol, ts_ms) +
+  *     mapPartitions`), and a fold emits a few rows per symbol. The fold
+  *     holds O(1) state per symbol and never buffers ticks; availability,
+  *     quality and regions are small aggregates of its output.
+  *   - Tick tagging is a map-side join against the windows, a broadcast
+  *     dimension table: no tick shuffle.
+  *   - The kernel phase partitions BY SCENARIO — the reference's
+  *     process-pool-per-scenario (`batch_orchestrator.py` worker pool)
+  *     becomes `repartition(scenarioId) + sortWithinPartitions +
+  *     mapPartitions`, one more tick shuffle, so a 1000-executor cluster
+  *     runs 1000 scenarios concurrently with no coordinator.
   */
 object Backtest {
 
@@ -102,20 +108,25 @@ object Backtest {
 
   /** Phases 1-6 (pre-kernel): coverage, availability, load, quality
     * gate, scenario windows, tick tagging. `warmupMs` is the caller's
-    * phase-3 requirement (max over the strategy grid for sweeps). */
+    * phase-3 requirement (max over the strategy grid for sweeps).
+    *
+    * Phases 1, 2, 5 and the regions of 6 come from ONE per-symbol scan of
+    * the feed ([[MountScan]]): a small frame of per-(symbol, region) rows
+    * whose aggregates equal `Catalog.coverage` → `availability`,
+    * `TickIngest.qualityReport` and `ScenarioWindows.continuousRegions`
+    * over the same feed, row for row. */
   def prepareMount(spark: SparkSession, ticks: DataFrame, cfg: Config,
                    warmupMs: Long): Mount = {
     import spark.implicits._
 
-    // ---- Phase 1: index & coverage -----------------------------------
-    val coverage = Catalog.coverage(ticks, Seq("symbol"), "ts_ms",
-      statCols = Seq("mid")).cache()
+    // ---- Phases 1, 2, 5, 6a: one sorted per-symbol scan --------------
+    val runs = MountScan.runs(ticks, cfg.halfSpread, cfg.splitGapMs).cache()
+    val validRuns = runs.filter(col("valid"))
 
     // ---- Phase 2: availability (requested range = full covered span) -
-    val span = coverage.agg(min(col("start_ms")), max(col("end_ms")))
-      .head()
+    val span = runs.agg(min(col("start_ms")), max(col("end_ms"))).head()
     val (startMs, endMs) = (span.getLong(0), span.getLong(1))
-    val avail = Catalog.availability(coverage, Seq("symbol"), startMs, endMs)
+    val avail = Catalog.availability(runs.toDF(), Seq("symbol"), startMs, endMs)
 
     // ---- Phase 4: load (spread synthesis for mid-only feeds) ---------
     val loaded = ticks.select(col("symbol"), col("ts_ms"),
@@ -124,13 +135,13 @@ object Backtest {
       .filter(col("ts_ms").isNotNull && col("mid").isNotNull)
 
     // ---- Phase 5: data quality gate ----------------------------------
-    val quality = TickIngest.qualityReport(
-      loaded.withColumn("broker_type", lit("SIM"))
-        .withColumn("source_file", lit("events"))
-        .withColumn("arrival_idx", col("ts_ms"))
-        .withColumn("spread_pct",
-          (col("ask") - col("bid")) / col("bid") * 100)
-        .withColumnRenamed("symbol", "symbol")).cache()
+    val quality = validRuns
+      .groupBy(lit("SIM").as("broker_type"), col("symbol"))
+      .agg(sum(col("n_rows")).as("n_ticks"),
+        sum(col("n_invalid_quote")).as("n_invalid_quote"),
+        sum(col("n_excess_spread")).as("n_excess_spread"),
+        sum(col("n_price_jumps")).as("n_price_jumps"))
+      .cache()
     val bad = quality.filter(
       col("n_invalid_quote") + col("n_excess_spread") >
         col("n_ticks") * cfg.maxBadQuotePct / 100.0)
@@ -139,8 +150,8 @@ object Backtest {
       s"phase 5: $nBad symbol(s) exceed the ${cfg.maxBadQuotePct}% bad-quote gate")
 
     // ---- Phase 6: scenario windows × kernel execution ----------------
-    val regions = ScenarioWindows.continuousRegions(
-      loaded, Seq("symbol"), "ts_ms", cfg.splitGapMs)
+    val regions = validRuns.select(col("symbol"), col("region_idx"),
+      col("start_ms").as("region_start_ms"), col("end_ms").as("region_end_ms"))
     val blocks = ScenarioWindows.blocks(regions, Seq("symbol"),
       cfg.blockMs, cfg.minBlockMs)
     val windows = ScenarioWindows.assignRolesTimeOrdered(blocks,

@@ -2,11 +2,12 @@ package graft.sim
 
 import scala.collection.mutable
 import org.apache.spark.sql.Dataset
+import graft.util.KeyRuns
 
 /** The per-scenario sequential simulation kernel (SURVEY §3.1 phase 6).
   *
-  * Distribution shape: `repartition(scenarioId)` +
-  * `sortWithinPartitions(scenarioId, timeMsc)` + one streaming pass per
+  * Distribution shape: [[graft.util.KeyRuns]] — `repartition(scenarioId)` +
+  * `sortWithinPartitions(scenarioId, timeMsc)` — + one streaming pass per
   * scenario — the Spark form of the reference's ProcessPool fork
   * (`batch_orchestrator.py:550-574`), with scenarios as the unit of
   * parallelism. State is O(open positions + pending orders + mid window)
@@ -43,11 +44,7 @@ object SimKernel {
                    logic: DecisionLogic): Dataset[ScenarioResult] = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    ticks
-      .repartition(org.apache.spark.sql.functions.col("scenarioId"))
-      .sortWithinPartitions(
-        org.apache.spark.sql.functions.col("scenarioId"),
-        org.apache.spark.sql.functions.col("timeMsc"))
+    KeyRuns(ticks, "scenarioId", "timeMsc")
       .mapPartitions { it =>
         new ScenarioRunner(config, logic).run(it)
       }
@@ -62,11 +59,7 @@ object SimKernel {
                            logic: DecisionLogic): Dataset[ScenarioOutcome] = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    ticks
-      .repartition(org.apache.spark.sql.functions.col("scenarioId"))
-      .sortWithinPartitions(
-        org.apache.spark.sql.functions.col("scenarioId"),
-        org.apache.spark.sql.functions.col("timeMsc"))
+    KeyRuns(ticks, "scenarioId", "timeMsc")
       .mapPartitions { it =>
         new ScenarioRunner(config, logic).runSafe(it)
       }
@@ -99,11 +92,7 @@ object SimKernel {
     require(variants.nonEmpty, "runScenariosMultiplexed needs >= 1 variant")
     val spark = ticks.sparkSession
     import spark.implicits._
-    ticks
-      .repartition(org.apache.spark.sql.functions.col("scenarioId"))
-      .sortWithinPartitions(
-        org.apache.spark.sql.functions.col("scenarioId"),
-        org.apache.spark.sql.functions.col("timeMsc"))
+    KeyRuns(ticks, "scenarioId", "timeMsc")
       .mapPartitions { it =>
         val runners = variants.map { case (vid, cfg, logic) =>
           (vid, new ScenarioRunner(cfg, logic))

@@ -950,10 +950,12 @@ object Similarity {
     *     (the two hash joins moved the candidate set twice more than the
     *     8× payload replication costs) — see PLAN.md round-5 ladder;
     *   - a pair sharing a signature in several tables is scored in each,
-    *     then collapsed by `distinct` on the scored triple — cosine is
+    *     then collapsed inside the ranking window: cosine is
     *     deterministic (index-ascending summation, the [[cosine]] kernel),
-    *     so duplicates agree bit-for-bit and the result set is identical
-    *     to the join form's;
+    *     so duplicates agree bit-for-bit and sit adjacent in the window's
+    *     (cosine desc, id_b asc) order, where a `lag()` comparison drops
+    *     every copy after the first — no separate `distinct` shuffle, and
+    *     the result set is identical to the join form's;
     *   - `planes = 0` (default) adapts the signature width to the input:
     *     planes = max(4, ceil(log2(n / 32))) keeps the expected bucket
     *     size ~32, so per-bucket pair generation stays O(n) overall as n
