@@ -75,14 +75,14 @@ object GraftSession {
       // AQE for CACHED plans (r18): by default Spark freezes a cached
       // plan's output partitioning (canChangeCachedPlanOutputPartitioning
       // = false), which disables partition COALESCING in the cache-
-      // materialization result stage — the memoized pair streams
-      // (ngramJaccardCached / cosineNearDupPairsCached) therefore ran
-      // their dedup + verify joins at the full initialPartitionNum (256)
-      // regardless of measured bytes: tools/JobCensus showed three
-      // 256-task ~1 s stages per q27 call whose siblings outside the
-      // cached subtree coalesced to ~30. Consumers of the cache re-derive
-      // partitioning from the scan, so letting AQE size these stages by
-      // bytes is semantics-neutral at every scale.
+      // materialization result stage — every frame a graft.util.SessionMemo
+      // persists (the pair streams, the hot-route df aggregate) therefore
+      // ran its joins at the full initialPartitionNum (256) regardless of
+      // measured bytes: tools/JobCensus showed three 256-task ~1 s stages
+      // per q27 call whose siblings outside the cached subtree coalesced
+      // to ~30. Consumers of the cache re-derive partitioning from the
+      // scan, so letting AQE size these stages by bytes is
+      // semantics-neutral at every scale.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       // Shuffle files are deleted only when the driver GCs the dependency

@@ -31,8 +31,4 @@ object SparkEntry {
     * the same parquet tables. Omitted entries get a rows-only check. */
   def oracleSql: Map[String, String] =
     registry.collect { case (name, QueryDef(_, Some(sql), _)) => name -> sql }.toMap
-
-  /** name -> one-line description, for reports/tooling. */
-  def descriptions: Map[String, String] =
-    registry.map { case (name, q) => name -> q.description }.toMap
 }

@@ -73,13 +73,4 @@ object Ohlcv {
       .withColumnRenamed("bucket", "bar_start")
       .withColumn("timeframe", lit(timeframe))
   }
-
-  /** Render every registry timeframe and union — mirrors
-    * `render_all_timeframes` (`vectorized_bar_renderer.py:75-105`).
-    */
-  def renderAllTimeframes(df: DataFrame, keys: Seq[Column], ts: Column, price: Column,
-                          volume: Column, tieBreak: Column): DataFrame =
-    Timeframes.keys.toSeq.sorted
-      .map(tf => renderTimeframe(df, keys, ts, price, volume, tieBreak, tf))
-      .reduce(_ unionByName _)
 }

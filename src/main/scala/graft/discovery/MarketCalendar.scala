@@ -35,9 +35,6 @@ object MarketCalendar {
   /** UTC hour-of-day from epoch ms. */
   def hourUtc(tsMs: Column): Column = floor(pmod(tsMs, lit(DayMs)) / 3600000L)
 
-  /** Monday–Friday = open (`is_market_open`). */
-  def isMarketOpen(tsMs: Column): Column = dowUtc(tsMs) <= 4
-
   /** True when [startMs, endMs] contains a fixed market holiday: the first
     * occurrence of (m, d) on/after the start date falls on/before the end
     * date (`gap_contains_holiday`, loop-free form). */

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
@@ -84,8 +85,14 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(alpha))
   }
 
-  /** Register `ema` for SQL: `ema(close, 0.2) OVER (...)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ema", exprs => EmaWindow(exprs.head, exprs(1)), "built-in")
+  /** Register `ema` for SQL: `ema(close, 0.2) OVER (...)`. Idempotent:
+    * a session that already resolves `ema` (the [[GraftExtensions]]
+    * injection, or an earlier call) keeps its builder, so repeated use
+    * neither replaces it nor logs Spark's replaced-function warning. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("ema")))
+      registry.createOrReplaceTempFunction(
+        "ema", exprs => EmaWindow(exprs.head, exprs(1)), "built-in")
+  }
 }

@@ -37,15 +37,6 @@ object Serve {
       .coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(path)
 
-  /** S11: per-event trade stream CSV (`event_stream_csv_writer.py`) —
-    * chronological event rows, partitioned output (this one IS a data
-    * feed, so it stays distributed).
-    */
-  def writeEventStreamCsv(events: DataFrame, path: String,
-                          orderCol: String = "ts_ms"): Unit =
-    events.sortWithinPartitions(col(orderCol))
-      .write.mode("overwrite").option("header", "true").csv(path)
-
   /** S13: report store — one JSON document set per report name
     * (`reports_router.py`: reports are written once, listed, and fetched
     * whole). */

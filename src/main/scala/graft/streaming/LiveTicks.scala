@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   * into a queue with a REST OHLC warmup
   * (`/root/reference/python/framework/autotrader/tick_sources/
   * kraken_tick_source.py`, `autotrader_tick_loop.py`). The Spark shape:
-  * any line-delimited transport (socket source here; Kafka in production
-  * — same parse stage) → `from_json` → typed ticks → the stateful bar
+  * any line-delimited `readStream` the caller opens (socket, Kafka — same
+  * parse stage) → `from_json` → typed ticks → the stateful bar
   * renderer, with warmup expressed as INITIAL STATE on the renderer
   * rather than a replayed batch, so restart and cold-start are the same
   * code path.
@@ -41,13 +41,6 @@ object LiveTicks {
         coalesce(col("t.qty"), lit(0.0)).as("volume"))
       .as[IncrementalBars.Tick]
   }
-
-  /** S14: the live loop — socket transport → parse. Production swaps the
-    * transport line for Kafka; everything downstream is unchanged. */
-  def fromSocket(spark: SparkSession, host: String, port: Int)
-      : Dataset[IncrementalBars.Tick] =
-    parse(spark.readStream.format("socket")
-      .option("host", host).option("port", port).load())
 
   /** Warm-started incremental bars: seed the per-key renderer state from
     * history (the REST-OHLC warmup analogue) so the first live bar

@@ -260,7 +260,7 @@ object Retrieval {
     * exactly. */
   private[text] def censusDf(docs: DataFrame, text: String,
       fraction: Double, sig: => String): (Long, Long) =
-    cachedCensus(docs, s"docs:$text", fraction, sig) {
+    censusCache.getOrCompute(docs, (s"docs:$text", fraction), sig) {
       val s =
         if (fraction >= 1.0) docs
         else docs.sample(withReplacement = false, fraction, seed = 8361L)
@@ -272,7 +272,7 @@ object Retrieval {
     * same two estimates from the postings rows directly. */
   private[text] def censusDfPostings(postings: DataFrame,
       fraction: Double, sig: => String): (Long, Long) =
-    cachedCensus(postings, "postings", fraction, sig) {
+    censusCache.getOrCompute(postings, ("postings", fraction), sig) {
       val s =
         if (fraction >= 1.0) postings
         else postings.sample(withReplacement = false, fraction, seed = 8361L)
@@ -290,15 +290,16 @@ object Retrieval {
   private def contentSig(df: DataFrame): String =
     graft.util.SourceSig.contentSig(df)
 
-  private case class CensusKey(sessionId: Int, planHash: Int, tag: String,
-                               fraction: Double)
-  private case class CensusEntry(plan: org.apache.spark.sql.catalyst.plans
-                                       .logical.LogicalPlan,
-                                 sig: String,
-                                 est: (Long, Long))
-  private val censusCache =
-    scala.collection.mutable.LinkedHashMap.empty[CensusKey, CensusEntry]
+  /** Census results per (session, source plan, column tag, fraction),
+    * under the [[graft.util.SessionMemo]] contract, signed by the source
+    * files' [[contentSig]]. The census is a sampled 1-row aggregate (~1%
+    * of one token pass), but a pipeline calling TF-IDF repeatedly on one
+    * corpus would otherwise pay it per CONSTRUCTION (it is an eager job);
+    * same-session repeats pay it once. Entries are two longs, eviction
+    * is free. */
   private val censusCacheCap = 8
+  private val censusCache =
+    new graft.util.SessionMemo[(String, Double), (Long, Long)](censusCacheCap)
 
   /** Number of census AGGREGATION JOBS actually run (not cache hits) —
     * the spec's accounting hook for the memoization contract. */
@@ -308,52 +309,9 @@ object Retrieval {
     * no executor storage). Pipeline-boundary hook, [[clearDfCache]]'s
     * sibling. Not needed for correctness of the routed QUERIES (both
     * routes are value-identical) nor after in-place corpus changes (a hit
-    * also compares the source files' [[contentSig]] and re-censuses on
-    * mismatch); it remains for callers who want the memo's driver memory
-    * back. */
-  def clearCensusCache(): Unit =
-    censusCache.synchronized(censusCache.clear())
-
-  /** Memoize a census result on (session, source plan, column tag,
-    * fraction) — the pair-cache identity convention (`sameResult` against
-    * the cached analyzed plan, never hash equality alone), PLUS the
-    * source files' [[contentSig]] compared on every hit: `sameResult`
-    * alone matched a re-read of the same path after an in-place
-    * append/overwrite, serving a route decision from stale maxDf/vocab
-    * estimates. The census is a sampled 1-row aggregate (~1% of one token
-    * pass), but a pipeline calling TF-IDF repeatedly on one corpus would
-    * otherwise pay it per CONSTRUCTION (it is an eager job); same-session
-    * repeats now pay it once. Bounded LRU; entries are two longs,
-    * eviction is free. */
-  private def cachedCensus(src: DataFrame, tag: String, fraction: Double,
-      sigIn: => String)(
-      compute: => (Long, Long)): (Long, Long) = {
-    val plan = src.queryExecution.analyzed
-    val sig = sigIn
-    val key = CensusKey(System.identityHashCode(src.sparkSession),
-      plan.semanticHash(), tag, fraction)
-    val hit = censusCache.synchronized {
-      censusCache.get(key) match {
-        case Some(e) if e.plan.sameResult(plan) && e.sig == sig =>
-          censusCache.remove(key); censusCache.put(key, e) // LRU touch
-          Some(e.est)
-        case _ => None
-      }
-    }
-    hit.getOrElse {
-      val est = compute // outside the lock: a real aggregation job
-      censusCache.synchronized {
-        censusCache.get(key) match {
-          case Some(e) if e.plan.sameResult(plan) && e.sig == sig => e.est
-          case _ =>
-            censusCache.put(key, CensusEntry(plan, sig, est))
-            if (censusCache.size > censusCacheCap)
-              censusCache.remove(censusCache.head._1)
-            est
-        }
-      }
-    }
-  }
+    * also compares the source files' [[contentSig]]); it remains for
+    * callers who want the memo's driver memory back. */
+  def clearCensusCache(): Unit = censusCache.clear()
 
   /** One aggregation job over the sampled term stream:
     * (sampleMaxCount/fraction, Chao1 vocabulary estimate). */
@@ -393,37 +351,20 @@ object Retrieval {
       else 0
     }
 
-  private case class DfKey(sessionId: Int, planHash: Int, hotH: Int)
-  private case class DfEntry(plan: org.apache.spark.sql.catalyst.plans
-                                   .logical.LogicalPlan,
-                             sig: String,
-                             dft: DataFrame,
-                             hotRows: Array[org.apache.spark.sql.Row])
-
-  private val dfCache =
-    scala.collection.mutable.LinkedHashMap.empty[DfKey, DfEntry]
   private val dfCacheCap = 4
+  /** (persisted df aggregate, its collected top-H rows) per (tf plan, H). */
+  private val dfCache =
+    new graft.util.SessionMemo[Int, (DataFrame, Array[org.apache.spark.sql.Row])](
+      dfCacheCap, e => Some(e._1))
 
   /** Drop every memoized hot-route df aggregate (unpersisting each).
     * Pipeline-boundary hook in long-lived sessions; the harness mains'
     * `spark.catalog.clearCache()` instead empties the STORAGE and leaves
-    * the entries — a later hit re-persists and recomputes lazily (the
-    * pair-cache convention, `Similarity.clearPairCache`). */
-  def clearDfCache(): Unit = dfCache.synchronized {
-    dfCache.valuesIterator.foreach(e => safeUnpersist(e.dft))
-    dfCache.clear()
-  }
+    * the entries (see [[graft.util.SessionMemo]]). */
+  def clearDfCache(): Unit = dfCache.clear()
 
-  private[text] def dfCacheSize: Int = dfCache.synchronized(dfCache.size)
-  private[text] def censusCacheSize: Int =
-    censusCache.synchronized(censusCache.size)
-
-  /** Unpersist tolerating a stopped owning session (the Bench harness
-    * rebuilds its session after a context-killing failure; the eviction
-    * path of an unrelated caller must not throw for it). NonFatal only. */
-  private def safeUnpersist(df: DataFrame): Unit =
-    try df.unpersist(blocking = false)
-    catch { case scala.util.control.NonFatal(_) => () }
+  private[text] def dfCacheSize: Int = dfCache.size
+  private[text] def censusCacheSize: Int = censusCache.size
 
   /** tf ⋈ df on `term`, routed: plain single join when `hotH == 0`;
     * otherwise the top-H terms by df close as a ≤H-row local list
@@ -442,91 +383,37 @@ object Retrieval {
     * heavy-hitter close and the cold join share ONE materialization
     * (Catalyst clones DAG-referenced subtrees into independent corpus
     * passes; the first SkewPhase cut of this route paid a full extra
-    * token exchange re-deriving it). Since round 15 that persist is
-    * MANAGED, not documented away: entries live in a bounded LRU keyed
-    * on (session, tf plan, H) and validated against the source files'
-    * [[contentSig]] on every hit (round 16: `sameResult` alone matched a
-    * re-read after an in-place corpus change, serving stale hotRows/dft
-    * against the fresh tf) — the `cosineNearDupPairsCached` precedent —
-    * so a library caller composing many hot-routed queries accumulates
-    * at most [[dfCacheCap]] vocabulary-sized entries, with evictions
-    * unpersisting; repeat calls on the same tf plan also reuse the
-    * already-collected heavy-hitter rows (no second close job). The
-    * plain route (and the auto route when it decides plain) persists
-    * nothing. */
+    * token exchange re-deriving it). That persist is MANAGED: entries
+    * live in a [[graft.util.SessionMemo]] keyed on (session, tf plan, H)
+    * and signed by the source files' [[contentSig]], so a library caller
+    * composing many hot-routed queries accumulates at most [[dfCacheCap]]
+    * vocabulary-sized entries; repeat calls on the same tf plan also
+    * reuse the already-collected heavy-hitter rows (no second close
+    * job). The plain route (and the auto route when it decides plain)
+    * persists nothing. */
   private def dfJoinRouted(tf: DataFrame, hotH: Int,
-      sigIn: => String): DataFrame = {
+      sig: => String): DataFrame = {
     val dftPlain = tf.groupBy(col("term"))
       .agg(count(lit(1)).cast("long").as("__df"))
     if (hotH <= 0) tf.join(dftPlain, "term")
     else {
-      val plan = tf.queryExecution.analyzed
-      // data identity, not just plan identity: a hit whose source files
-      // changed in place (append/overwrite under the same path) would
-      // otherwise join the FRESH tf against the STALE collected hotRows
-      // and the STALE persisted dft — new terms silently dropped by the
-      // inner join and df values wrong (sameResult is rootPaths-based
-      // for file scans; see contentSig). The caller shares ONE listing
-      // between this check and the census memo's.
-      val sig = sigIn
-      val key = DfKey(System.identityHashCode(tf.sparkSession),
-        plan.semanticHash(), hotH)
-      val hit = dfCache.synchronized {
-        dfCache.get(key) match {
-          case Some(e) if e.plan.sameResult(plan) && e.sig == sig =>
-            dfCache.remove(key); dfCache.put(key, e) // LRU touch
-            Some(e)
-          case _ => None
-        }
-      }
-      val entry = hit match {
-        case Some(e) =>
-          // clearCache() may have emptied the storage behind this entry;
-          // re-persisting a still-persisted frame is a no-op.
-          if (e.dft.storageLevel ==
-            org.apache.spark.storage.StorageLevel.NONE)
-            e.dft.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          e
-        case None =>
-          // Compute OUTSIDE the lock (the heavy-hitter close is a real
-          // job). A concurrent same-key miss costs one redundant close;
-          // last writer wins and the loser is unpersisted.
-          val dft = dftPlain.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // Bounded close of the heavy hitters (≤ hotH rows; ties at the
-          // boundary broken by term asc — deterministic, and harmless
-          // either way since df is identical on both routes).
-          val hotRows = dft.orderBy(col("__df").desc, col("term").asc)
-            .limit(hotH).collect()
-          dfCache.synchronized {
-            dfCache.get(key) match {
-              case Some(e) if e.plan.sameResult(plan) && e.sig == sig =>
-                safeUnpersist(dft)
-                e
-              case _ =>
-                // a same-key entry that failed the sig check is stale:
-                // replace it and release its storage
-                dfCache.remove(key).foreach(old => safeUnpersist(old.dft))
-                val e = DfEntry(plan, sig, dft, hotRows)
-                dfCache.put(key, e)
-                if (dfCache.size > dfCacheCap) {
-                  val (k0, e0) = dfCache.head
-                  dfCache.remove(k0)
-                  safeUnpersist(e0.dft)
-                }
-                e
-            }
-          }
+      val (dft, hotRows) = dfCache.getOrCompute(tf, hotH, sig) {
+        val dft = dftPlain.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // Bounded close of the heavy hitters (≤ hotH rows; ties at the
+        // boundary broken by term asc — deterministic, and harmless
+        // either way since df is identical on both routes).
+        (dft, dft.orderBy(col("__df").desc, col("term").asc)
+          .limit(hotH).collect())
       }
       val spark = tf.sparkSession
       val hot = spark.createDataFrame(
-        java.util.Arrays.asList(entry.hotRows: _*), entry.dft.schema)
+        java.util.Arrays.asList(hotRows: _*), dft.schema)
         .as("graft_hot_terms")
       val tfHot = tf.join(broadcast(hot), "term")
       val tfCold = tf
         .join(broadcast(hot.select(col("term"))), Seq("term"), "left_anti")
-        .join(entry.dft, "term")
+        .join(dft, "term")
       tfHot.unionByName(tfCold)
     }
   }
@@ -1325,18 +1212,20 @@ object Retrieval {
     org.apache.spark.sql.types.StructField("sumdl",
       org.apache.spark.sql.types.LongType)))
 
-  /** Postings schema per (session, indexPath, config fingerprint) —
-    * only the `doc` column's type varies (the source id column), and the
-    * config fingerprint pins it (a changed id column is a changed
-    * `columns` config ⇒ full rebuild ⇒ new fingerprint), so the one
-    * footer-read job per index pays once per session instead of once
-    * per QUERY (r18: q99/q100 each ran two schema-inference jobs per
-    * call — measured by tools/JobCensus as 2 of q100's 13 steady-state
-    * jobs). Bounded: one entry per distinct index an application
-    * serves. */
-  private val postingsSchemaCache =
-    scala.collection.mutable.HashMap
-      .empty[(Int, String, String), org.apache.spark.sql.types.StructType]
+  /** Postings schema per (session, indexPath), signed by the manifest's
+    * commit `generation` (and config fingerprint): only the `doc` column's
+    * type varies (the source id column), and every commit may change it
+    * (an in-place source rewrite with a new id type rebuilds under the
+    * same config), so the one footer-read job per index is paid once per
+    * commit per session instead of once per QUERY (q99/q100 each ran two
+    * schema-inference jobs per call). A [[graft.util.SessionMemo]] with
+    * no source plan; the signature alone decides validity. Generations
+    * restart only when the index directory itself is deleted: an index
+    * deleted and re-created under the same path and config within one
+    * session keeps the first schema (re-create it under a new path). */
+  private val postingsSchemaCacheCap = 16
+  private val postingsSchemaCache = new graft.util.SessionMemo[
+    String, org.apache.spark.sql.types.StructType](postingsSchemaCacheCap)
 
   /** Postings + corpus stats of a [[buildPostingsIndex]] index: the
     * union of every manifest segment's postings (rows are disjoint —
@@ -1345,7 +1234,7 @@ object Retrieval {
     * stats row. Falls back to the pre-segment v2 single-table layout
     * when no manifest exists. Reading the union keeps per-file row-group
     * pruning: a query's `term IN (...)` pushes into every segment's
-    * scan. Schemas are supplied explicitly (memoized per index config),
+    * scan. Schemas are supplied explicitly (memoized per index commit),
     * so serving never pays per-call schema-inference jobs. */
   private def readIndex(spark: SparkSession,
       indexPath: String): (DataFrame, DataFrame) =
@@ -1353,11 +1242,10 @@ object Retrieval {
       case Some(m) =>
         val dirs = decodeSegments(m).map(_.dir)
         require(dirs.nonEmpty, s"empty postings index at $indexPath")
-        val key = (System.identityHashCode(spark), indexPath,
-          m.getOrElse("config", ""))
-        val postingsSchema = postingsSchemaCache.synchronized {
-          postingsSchemaCache.getOrElseUpdate(key,
-            spark.read.parquet(s"$indexPath/${dirs.head}/postings").schema)
+        val postingsSchema = postingsSchemaCache.getOrCompute(spark,
+          indexPath,
+          s"${m.getOrElse("generation", "")}/${m.getOrElse("config", "")}") {
+          spark.read.parquet(s"$indexPath/${dirs.head}/postings").schema
         }
         val postings = spark.read.schema(postingsSchema).parquet(
           dirs.map(d => s"$indexPath/$d/postings"): _*)

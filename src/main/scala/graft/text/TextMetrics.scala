@@ -34,12 +34,6 @@ object TextMetrics {
   def tokenCountBpeish(text: Column): Column =
     size(regexp_extract_all(text, lit(BpeishPattern), lit(0))).cast("long")
 
-  /** Count occurrences of `word` as a whole token: filter the token array.
-    * Exact (handles consecutive repeats) and expressible identically in
-    * DuckDB (`len(list_filter(string_split(...), ...))`). */
-  def wordCount(text: Column, word: String): Column =
-    size(filter(tokenArr(text), t => t === lit(word))).cast("long")
-
   /** Per-document quality metrics: token/char counts, average token length,
     * unique-token (type/token) ratio, stopword ratio — the reference-style
     * length/stopword quality gates for corpus filtering.

@@ -3,22 +3,13 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 
 /** Shared content identity of a DataFrame's FILE-backed sources — the
-  * invariant every plan-keyed memo in this codebase must enforce
-  * (`graft.text.Retrieval`'s df/census memos, `graft.dedup.Dedup`'s and
-  * `graft.similarity.Similarity`'s pair-stream memos, the postings-index
-  * manifest): Catalyst's `sameResult` compares file scans by RELATION
-  * identity (`InMemoryFileIndex` equality is rootPaths-based), so a
-  * re-read of the same path after an in-place append/overwrite
-  * sameResult-matches a plan captured over DIFFERENT bytes — plan
-  * identity is not data identity for file sources. A memo keyed on a
-  * plan must therefore also compare [[contentSig]] on every hit and
-  * invalidate on mismatch.
-  *
-  * Lifted out of `Retrieval` (round 17) so the pair-stream memos share
-  * one implementation instead of re-deriving the rule — the round-16
-  * fix landed in Retrieval's two memos only, leaving the other two
-  * `sameResult`-keyed caches serving stale pairs after an in-place
-  * corpus change (exactly the shape `StreamingIndex` makes routine).
+  * signature every plan-keyed [[SessionMemo]] in this codebase compares
+  * on each hit, and what the postings- and vector-index manifests record:
+  * Catalyst's `sameResult` compares file scans by RELATION identity
+  * (`InMemoryFileIndex` equality is rootPaths-based), so a re-read of the
+  * same path after an in-place append/overwrite sameResult-matches a plan
+  * captured over DIFFERENT bytes — plan identity is not data identity for
+  * file sources (exactly the shape `StreamingIndex` makes routine).
   */
 object SourceSig {
 

@@ -44,6 +44,19 @@ class EmaWindowSpec extends SparkSpecBase {
         |FROM ema_in ORDER BY seq""".stripMargin)
       .collect().map(_.getDouble(0))
     assert(out.toSeq === Seq(10.0, 15.0))
+    // registration is idempotent: in a fresh session, two ema(...) calls
+    // keep the builder the extension injected instead of replacing it
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    val ema = org.apache.spark.sql.catalyst.FunctionIdentifier("ema")
+    val injected = registry.lookupFunctionBuilder(ema)
+    assert(injected.isDefined)
+    org.apache.spark.sql.SparkSession.setActiveSession(fresh)
+    try {
+      GraftFunctions.ema($"v", 0.5)
+      GraftFunctions.ema($"v", 0.5)
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    assert(registry.lookupFunctionBuilder(ema).get eq injected.get)
   }
 
   test("matches the recursive-CTE oracle shape on real events data") {

@@ -65,6 +65,26 @@ class PairCacheSpec extends SparkSpecBase {
     Similarity.clearPairCache()
   }
 
+  test("sessions never share an entry: one table, two sessions, two frames") {
+    Similarity.clearPairCache()
+    val other = spark.newSession()
+    val otherEmb = graft.Tables.embeddings(other, "/root/testdata/sf0.001")
+    val a = Similarity.cosineNearDupPairsCached(emb, "vec_id", "embedding", 0.4)
+    val b = Similarity.cosineNearDupPairsCached(otherEmb, "vec_id",
+      "embedding", 0.4)
+    assert(Similarity.pairCacheSize === 2)
+    assert(!(a eq b))
+    assert(a.sparkSession eq spark)
+    assert(b.sparkSession eq other)
+    // each session's repeat is served its own frame, never the other's
+    assert(Similarity.cosineNearDupPairsCached(emb, "vec_id", "embedding",
+      0.4) eq a)
+    assert(Similarity.cosineNearDupPairsCached(otherEmb, "vec_id",
+      "embedding", 0.4) eq b)
+    assert(Similarity.pairCacheSize === 2)
+    Similarity.clearPairCache()
+  }
+
   test("q84 reuses q70's pairs in one session (the registry pipeline)") {
     Similarity.clearPairCache()
     val dir = "/root/testdata/sf0.001"

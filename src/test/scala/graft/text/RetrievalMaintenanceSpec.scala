@@ -376,6 +376,31 @@ class RetrievalMaintenanceSpec extends SparkSpecBase {
       "ledger must hold at most keepGenerations retired dirs here")
   }
 
+  test("postings schema follows the commit: a rebuilt id type is served") {
+    val base = tmpDir("graft_schema")
+    val corpusDir = s"$base/docs.parquet"
+    val idxDir = s"$base/idx"
+    def build(): Unit = Retrieval.buildPostingsIndex(
+      spark.read.parquet(corpusDir), "doc_id", "text", idxDir,
+      sourceTag = corpusDir)
+    corpus.toDF("doc_id", "text").repartition(1)
+      .write.mode("overwrite").parquet(corpusDir)
+    build()
+    val longIds = Retrieval.bm25FromIndex(spark, idxDir, Seq("apple"), 10)
+      .collect().map(_.getLong(0)).toSet
+    assert(longIds === Set(1L, 3L))
+    // overwrite in place with STRING ids under the same column name and
+    // sourceTag: same config, new generation, new postings schema
+    corpus.map { case (id, t) => (s"d$id", t) }.toDF("doc_id", "text")
+      .repartition(1).write.mode("overwrite").parquet(corpusDir)
+    build()
+    assert(Retrieval.lastBuildInfo.mode === "full")
+    val served = Retrieval.bm25FromIndex(spark, idxDir, Seq("apple"), 10)
+    assert(served.schema("doc").dataType ===
+      org.apache.spark.sql.types.StringType)
+    assert(served.collect().map(_.getString(0)).toSet === Set("d1", "d3"))
+  }
+
   test("retention ledger: graceMs keeps a just-retired dir past its generations") {
     val base = tmpDir("graft_grace")
     val corpusDir = s"$base/docs.parquet"
